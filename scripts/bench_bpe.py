@@ -63,15 +63,16 @@ def run(n_merges=1000, batch=256):
         return orig(vocab, p)
 
     B._apply_merges = counting
-    t0 = time.time()
-    m = B.learn_bpe(docs, n_merges=n_merges, batch=batch)
-    got = [(r["left"], r["right"], r["cnt"])
-           for r in m.orderBy("step").collect()]
-    dt = time.time() - t0
+    try:
+        t0 = time.time()
+        m = B.learn_bpe(docs, n_merges=n_merges, batch=batch)
+        got = [(r["left"], r["right"], r["cnt"])
+               for r in m.orderBy("step").collect()]
+        dt = time.time() - t0
+    finally:
+        B._apply_merges = orig
 
     # equality spot-check vs batch=1 on the first 64 merges
-    rounds2 = {"n": 0}
-    B._apply_merges = orig
     m1 = B.learn_bpe(docs, n_merges=64, batch=1)
     seq = [(r["left"], r["right"], r["cnt"])
            for r in m1.orderBy("step").collect()]

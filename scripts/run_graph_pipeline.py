@@ -28,7 +28,6 @@ from __future__ import annotations
 
 import json
 import sys
-import time
 from pathlib import Path
 
 sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
@@ -37,70 +36,41 @@ from pyspark.sql import functions as F  # noqa: E402
 
 from urbanistic_polygons_spark import datagen  # noqa: E402
 from urbanistic_polygons_spark.operators.classify import (  # noqa: E402
-    classify_barrier_ways, classify_landuse_ways)
+    classify_barrier_ways)
 from urbanistic_polygons_spark.operators.graph_build import (  # noqa: E402
-    build_faces_from_ways, build_graph_tables, classify_barriers,
-    planarize_edges, split_ways_to_edges)
+    build_faces_from_ways, build_graph_tables, checkpoint_graph,
+    classify_barriers, planarize_edges, split_ways_to_edges)
 from urbanistic_polygons_spark.operators.landuse_join import (  # noqa: E402
-    assign_landuse, dominant_type)
+    assign_landuse, dominant_type, landuse_rings)
 from urbanistic_polygons_spark.operators.merge import (  # noqa: E402
     merge_faces, segment_resistance)
-from urbanistic_polygons_spark.plans.lineage import LineageStore  # noqa: E402
+from urbanistic_polygons_spark.plans.lineage import (  # noqa: E402
+    LineageStore, stage_report)
+from urbanistic_polygons_spark.sources.mvt import faces_to_mvt  # noqa: E402
+
+STAGES = ("graph_vertices", "graph_edges", "faces", "landuse", "merge",
+          "tiles")
 
 
 def run(spark, workdir: str, k: int = 6,
         merge_threshold: int = 3) -> dict:
     store = LineageStore(workdir)
-    stages: dict[str, dict] = {}
-
-    def run_stage(name, df, partition_col):
-        t0 = time.perf_counter()
-        out = store.checkpoint(df, name, partition_col)
-        stages[name] = {
-            "rows": store.counters(name).get("n_rows"),
-            "partitions": store.counters(name).get("n_partitions"),
-            "sec": round(time.perf_counter() - t0, 2),
-        }
-        return out
-
-    nodes_pdf, ways_pdf = datagen.gen_ways_grid(k=k, seed=44, jitter=0.0)
-    nodes = spark.createDataFrame(
-        nodes_pdf, schema="node_id long, lon double, lat double")
-    ways = spark.createDataFrame(
-        ways_pdf, schema="way_id long, nodes array<long>, tags map<string,string>")
+    nodes, ways = datagen.ways_grid_df(spark, k)
 
     # stage 1: entity tables (vertex/edge GUIDs = the cross-partition
     # join keys, reference TiledBarrierGraphSerializer.cs:14-85)
-    vertices, g_edges = build_graph_tables(nodes, ways)
-    run_stage("graph_vertices", vertices, "tile_id")
-    run_stage("graph_edges", g_edges, "v1_tile")
+    checkpoint_graph(store, *build_graph_tables(nodes, ways))
 
     # stage 2: faces (checkpoint consumed by every later stage: resume
     # after a kill re-reads the committed faces, never re-walks)
-    faces = build_faces_from_ways(nodes, ways)
-    faces = run_stage("faces", faces, "anchor_cell")
+    faces = store.checkpoint(build_faces_from_ways(nodes, ways), "faces",
+                             "anchor_cell")
     faces = faces.dropDuplicates(["face_guid"]).localCheckpoint(eager=True)
 
     # stage 3: dominant landuse per face
-    lu_ways = classify_landuse_ways(spark, ways)
-    pts = (lu_ways.select("way_id", "cls",
-                          F.posexplode("nodes").alias("pos", "node_id"))
-           .join(nodes.select("node_id", "lon", "lat"), "node_id"))
-    rings = (pts.groupBy("way_id")
-             .agg(F.array_sort(F.collect_list(
-                 F.struct("pos", "lon", "lat"))).alias("p"),
-                 F.first("cls").alias("cls"))
-             .select(F.col("way_id").alias("lu_id"), "cls",
-                     F.concat_ws(";", F.transform(
-                         "p", lambda q: F.format_string(
-                             "%.9f %.9f", q["lon"], q["lat"]))).alias("ring"),
-                     F.array_min(F.transform("p", lambda q: q["lon"])).alias("min_lon"),
-                     F.array_min(F.transform("p", lambda q: q["lat"])).alias("min_lat"),
-                     F.array_max(F.transform("p", lambda q: q["lon"])).alias("max_lon"),
-                     F.array_max(F.transform("p", lambda q: q["lat"])).alias("max_lat")))
-    dom = (dominant_type(assign_landuse(faces, rings))
+    dom = (dominant_type(assign_landuse(faces, landuse_rings(spark, nodes, ways)))
            .join(faces.select("face_guid", "anchor_cell"), "face_guid"))
-    dom = run_stage("landuse", dom, "anchor_cell")
+    dom = store.checkpoint(dom, "landuse", "anchor_cell")
 
     # stage 4: merge-by-similarity regions.  Edges MUST be planarized to
     # match the faces (built with planarize_crossings=True): on crossing
@@ -112,19 +82,19 @@ def run(spark, workdir: str, k: int = 6,
     seg_res = segment_resistance(edges, classify_barrier_ways(spark, ways))
     merged = merge_faces(faces, seg_res, merge_threshold,
                          dominant=dom.select("face_guid", "dominant_cls"))
-    merged = run_stage("merge", merged, "anchor_cell")
+    merged = store.checkpoint(merged, "merge", "anchor_cell")
 
     # stage 5: merged interior faces -> z14 MVT blobs
-    from urbanistic_polygons_spark.sources.mvt import faces_to_mvt
     tiles = faces_to_mvt(
         merged.select("face_guid", "ring", "min_lon", "min_lat",
                       "max_lon", "max_lat"))
-    run_stage("tiles", tiles.select(
+    store.checkpoint(tiles.select(
         "tile_z", "tile_x", "tile_y", "n_features",
         F.length("mvt").alias("mvt_bytes"),
-        F.col("tile_y").alias("tile_prefix")), "tile_prefix")
+        F.col("tile_y").alias("tile_prefix")), "tiles", "tile_prefix")
 
-    return {"workdir": workdir, "k": k, "stages": stages}
+    return {"workdir": workdir, "k": k,
+            "stages": stage_report(store, STAGES)}
 
 
 def main() -> None:

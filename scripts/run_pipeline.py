@@ -20,7 +20,6 @@ from __future__ import annotations
 
 import json
 import sys
-import time
 from pathlib import Path
 
 sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
@@ -28,56 +27,26 @@ sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 from pyspark.sql import functions as F  # noqa: E402
 
 from urbanistic_polygons_spark import datagen  # noqa: E402
-from urbanistic_polygons_spark.catalog import q_spans_spark  # noqa: E402
+from urbanistic_polygons_spark.catalog.spans import spans_documents  # noqa: E402
+from urbanistic_polygons_spark.functions import cells as C  # noqa: E402
 from urbanistic_polygons_spark.operators.spatial_join import (  # noqa: E402
     assign_documents, extract_geo_points)
-from urbanistic_polygons_spark.plans.lineage import LineageStore  # noqa: E402
-from urbanistic_polygons_spark.session import get_spark  # noqa: E402
+from urbanistic_polygons_spark.plans.lineage import (  # noqa: E402
+    LineageStore, stage_report)
+from urbanistic_polygons_spark.sources.mvt import faces_to_mvt  # noqa: E402
+
+STAGES = ("ingest", "assign", "rollup", "tiles")
 
 
-def main() -> None:
-    workdir = sys.argv[1] if len(sys.argv) > 1 else "/tmp/upspark_pipeline"
-    sf_dir = sys.argv[2] if len(sys.argv) > 2 else "/root/testdata/sf0.001"
-    spark = get_spark("pipeline")
+def run(spark, workdir: str, sf_dir: str) -> dict:
     store = LineageStore(workdir)
-    stages: dict[str, dict] = {}
-
-    def run_stage(name, df, partition_col):
-        t0 = time.perf_counter()
-        out = store.checkpoint(df, name, partition_col)
-        stages[name] = {
-            "rows": store.counters(name).get("n_rows"),
-            "partitions": store.counters(name).get("n_partitions"),
-            "sec": round(time.perf_counter() - t0, 2),
-        }
-        return out
 
     # stage 1: ingest — interleaved spans -> geo points with cell ids,
     # partitioned by cell prefix (the salted-repartition key space)
-    spans = q_spans_spark(spark, sf_dir)
-    # geo spans carry integer micro-coords; convert to lon/lat for the
-    # engine (same mapping as __spark_entry__.entry)
-    spans = spans.withColumn("content", F.when(
-        F.col("kind") == "geo",
-        F.concat(
-            ((F.split("content", ",").getItem(0).cast("double") / 10000 + 8300)
-             / 16384 * 360 - 180).cast("string"),
-            F.lit(","),
-            (F.lit(51.0) - F.split("content", ",").getItem(1).cast("double")
-             / 10000 * 0.01).cast("string"))).otherwise(F.col("content")))
-    docs = (spans.groupBy("doc_id")
-            .agg(F.array_sort(F.collect_list(F.struct(
-                F.col("span_offset").alias("offset"),
-                F.col("kind"), F.col("content").alias("text"),
-                F.col("media_ref")))).alias("raw"))
-            .select(F.col("doc_id").cast("string").alias("doc_id"),
-                    F.transform("raw", lambda s: F.struct(
-                        s["kind"].alias("kind"), s["text"].alias("text"),
-                        s["media_ref"].alias("media_ref"),
-                        s["offset"].cast("int").alias("offset"))).alias("spans")))
+    docs = spans_documents(spark, sf_dir)
     pts = extract_geo_points(docs).withColumn(
         "cell_prefix", F.shiftright("cell_id", 8))
-    pts = run_stage("ingest", pts, "cell_prefix")
+    pts = store.checkpoint(pts, "ingest", "cell_prefix")
 
     # stage 2: assign — full flagship (PIP + kNN) against the broadcast
     # polygon index, consuming the CHECKPOINTED stage-1 points so a resume
@@ -85,19 +54,17 @@ def main() -> None:
     polygons = datagen.polygons_df(spark, 300, seed=43)
     assigned = assign_documents(docs, polygons, points=pts).withColumn(
         "cell_prefix", F.shiftright("cell_id", 8))
-    assigned = run_stage("assign", assigned, "cell_prefix")
+    assigned = store.checkpoint(assigned, "assign", "cell_prefix")
 
     # stage 3: rollup — per-cell density of assignments
     rollup = (assigned.groupBy("cell_id", "method")
               .agg(F.count("*").alias("n_docs"))
               .withColumn("cell_prefix", F.shiftright("cell_id", 8)))
-    run_stage("rollup", rollup, "cell_prefix")
+    store.checkpoint(rollup, "rollup", "cell_prefix")
 
     # stage 4: tiles — assigned-point density -> z11 MVT blobs
-    from urbanistic_polygons_spark.sources.mvt import faces_to_mvt
     cells = (assigned.filter(F.col("polygon_guid").isNotNull())
              .groupBy("cell_id").agg(F.count("*").alias("n")))
-    from urbanistic_polygons_spark.functions import cells as C
     min_lon, min_lat, max_lon, max_lat = C.cell_bounds(F.col("cell_id"))
     pt = lambda a, b: F.format_string("%.9f %.9f", a, b)  # noqa: E731
     faces = cells.select(
@@ -109,11 +76,21 @@ def main() -> None:
         max_lon.alias("max_lon"), max_lat.alias("max_lat"))
     tiles = faces_to_mvt(faces, zoom=11).withColumn(
         "tile_prefix", F.col("tile_y"))
-    run_stage("tiles", tiles.select(
+    store.checkpoint(tiles.select(
         "tile_z", "tile_x", "tile_y", "n_features",
-        F.length("mvt").alias("mvt_bytes"), "tile_prefix"), "tile_prefix")
+        F.length("mvt").alias("mvt_bytes"), "tile_prefix"), "tiles",
+        "tile_prefix")
 
-    print(json.dumps({"workdir": workdir, "sf_dir": sf_dir, "stages": stages}))
+    return {"workdir": workdir, "sf_dir": sf_dir,
+            "stages": stage_report(store, STAGES)}
+
+
+def main() -> None:
+    from urbanistic_polygons_spark.session import get_spark
+    workdir = sys.argv[1] if len(sys.argv) > 1 else "/tmp/upspark_pipeline"
+    sf_dir = sys.argv[2] if len(sys.argv) > 2 else "/root/testdata/sf0.001"
+    spark = get_spark("pipeline")
+    print(json.dumps(run(spark, workdir, sf_dir)))
     spark.stop()
 
 

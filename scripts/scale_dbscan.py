@@ -62,6 +62,9 @@ def const_density_pts(spark, n, area_mult):
 
 
 def main():
+    if not (Path(SF10) / "_SCALE_OK").exists():
+        raise SystemExit(f"{SF10} is missing: build the 10x dataset first "
+                         "with `python scripts/scale_stress.py`")
     spark = get_spark("dbscan_scale", cores=16, shuffle_partitions=32)
     out = {}
 

@@ -49,8 +49,9 @@ def build_points(spark, n: int, cores: int, nonce: int = 0):
 
     Partitions = cores * 2: the Python-runner protocol costs ~180 ms of
     thread time PER mapInPandas task on this host (measured with a
-    trivial passthrough kernel, scripts/probe_fixed.py — not worker
-    startup, workers are reused; not the kernel body), so task count is
+    trivial passthrough kernel by the since-deleted probe_fixed.py, see
+    `git log -- scripts/probe_fixed.py` — not worker startup, workers
+    are reused; not the kernel body), so task count is
     the fixed-cost knob.  cores*2 halves that overhead vs the original
     cores*4 while keeping two waves per level so a transient burst on
     one thread can still be absorbed by work stealing (tasks are

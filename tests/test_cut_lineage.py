@@ -57,6 +57,22 @@ def test_cut_lineage_bounds_selfjoin_stat_growth(spark):
     assert labels.count() == 50
 
 
+def test_cut_lineage_fallback_warns(spark, monkeypatch):
+    """When the originStats strip fails (internal-API drift), cut_lineage
+    still returns the plain checkpoint's rows, and says so."""
+    from urbanistic_polygons_spark.operators import dedup
+
+    def rewrap_fails(*args):
+        raise RuntimeError("Dataset re-wrap unavailable")
+
+    monkeypatch.setattr(dedup, "DataFrame", rewrap_fails)
+    df = spark.range(30).withColumn("g", F.col("id") % 3)
+    with pytest.warns(RuntimeWarning, match="could not strip originStats"):
+        out = dedup.cut_lineage(df)
+    assert sorted(tuple(r) for r in out.collect()) == sorted(
+        tuple(r) for r in df.collect())
+
+
 def test_components_on_long_chain_converges(spark):
     """A 300-node path graph forces many propagation rounds — the shape
     that hit the stats blowup before the fix; exact answer asserted."""

@@ -178,6 +178,8 @@ def test_lineage_resume(spark, tmp_path):
     # idempotent re-run: nothing duplicated
     r3 = store.checkpoint(df, "stage1", "part")
     assert r3.count() == 100
+    # the snapshot log is the store's only record: no side counters file
+    assert not list((tmp_path / "ckpt").glob("_lineage_*.json"))
 
 
 def test_streaming_cell_counts(spark, tmp_path):
@@ -513,10 +515,12 @@ def test_lineage_snapshot_isolation(spark, tmp_path):
     snaps = store.snapshots("s")
     assert [s["snapshot_id"] for s in snaps] == [1, 2]
     assert snaps[1]["parent_id"] == 1 and snaps[1]["rows_added"] == 50
+    assert all(s["wall_s"] >= 0 for s in snaps)
 
     # rollback to snapshot 1: partitions 2/3 uncommitted again
     store.rollback("s", 1)
     assert store.committed_partitions("s") == [0, 1]
+    assert store.counters("s")["n_rows"] == 50
     assert store.read("s").count() == 50
     r = store.checkpoint(df, "s", "part")                         # snap 3
     assert r.count() == 100
@@ -610,9 +614,10 @@ def test_lineage_empty_first_commit(spark, tmp_path):
 
 
 def test_lineage_compact_updates_counters_and_expires_as_of(spark, tmp_path):
-    """compact() must keep the legacy counters file in step (ADVICE r3:
-    current_snapshot pointed at a deleted commit id) and reads as-of a
-    compacted-away snapshot must raise, not silently return empty."""
+    """After compact() the counters point at the compacted snapshot
+    (ADVICE r3: a hand-synced counters file once pointed current_snapshot
+    at a deleted commit id) and reads as-of a compacted-away snapshot
+    must raise, not silently return empty."""
     import pytest
     from urbanistic_polygons_spark.plans.lineage import LineageStore
     store = LineageStore(str(tmp_path / "store"))
@@ -624,6 +629,7 @@ def test_lineage_compact_updates_counters_and_expires_as_of(spark, tmp_path):
     cid = store.compact("s")
     c = store.counters("s")
     assert c["current_snapshot"] == cid
+    assert store.snapshots("s")[0]["wall_s"] >= 0
     assert c["n_rows"] == 3 and c["n_partitions"] == 3
     assert store.read("s", as_of=cid).count() == 3
     with pytest.raises(LookupError, match="expired by compaction"):

@@ -37,6 +37,11 @@ ORDERS_QUERIES = ["hll_distinct", "dedup_keeper", "pivot_status",
                   "morans_i"]
 
 SEEDS = [11, 29]
+# one more input: a zero-row orders table, for the query whose driver-side
+# scalar collects once raised on it (the oracle returns one row there)
+EMPTY_ORDERS = "empty"
+CASES = ([(n, s) for n in LINEITEM_QUERIES + ORDERS_QUERIES for s in SEEDS]
+         + [("morans_i", EMPTY_ORDERS)])
 
 CUTOFF = pd.Timestamp("1998-09-02 00:00:00")
 
@@ -101,10 +106,14 @@ def _gen_orders(seed: int) -> pd.DataFrame:
 @pytest.fixture(scope="module")
 def numeric_dirs(tmp_path_factory):
     dirs = {}
-    for seed in SEEDS:
+    for seed in SEEDS + [EMPTY_ORDERS]:
         d = tmp_path_factory.mktemp(f"rn{seed}")
-        _gen_lineitem(seed).to_parquet(d / "lineitem.parquet", index=False)
-        _gen_orders(seed).to_parquet(d / "orders.parquet", index=False)
+        gen_seed = SEEDS[0] if seed == EMPTY_ORDERS else seed
+        orders = _gen_orders(gen_seed)
+        if seed == EMPTY_ORDERS:
+            orders = orders[:0]
+        _gen_lineitem(gen_seed).to_parquet(d / "lineitem.parquet", index=False)
+        orders.to_parquet(d / "orders.parquet", index=False)
         for t in TABLES:
             if t not in ("lineitem", "orders"):
                 os.symlink(f"/root/testdata/sf0.001/{t}.parquet",
@@ -113,8 +122,7 @@ def numeric_dirs(tmp_path_factory):
     return dirs
 
 
-@pytest.mark.parametrize("seed", SEEDS)
-@pytest.mark.parametrize("name", LINEITEM_QUERIES + ORDERS_QUERIES)
+@pytest.mark.parametrize("name,seed", CASES)
 def test_random_numeric_oracle(spark, numeric_dirs, name, seed):
     sf_dir = numeric_dirs[seed]
     spec = CATALOG[name]

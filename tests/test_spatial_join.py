@@ -155,3 +155,25 @@ def test_pip_only_points_inside(data):
         rx, ry = rings[r.polygon_guid]
         assert kernels.points_in_polygon(
             np.array([r.lon]), np.array([r.lat]), rx, ry)[0]
+
+
+def test_assign_pipeline_stages_and_resume(spark, tmp_path):
+    """The flagship assign pipeline (ingest -> assign -> rollup -> tiles)
+    commits LineageStore snapshots; a re-run with the same workdir adds
+    0 rows and reports identical stage counters."""
+    import sys
+    from pathlib import Path
+    sys.path.insert(0, str(Path(__file__).resolve().parent.parent / "scripts"))
+    import run_pipeline as P
+
+    wd = str(tmp_path / "assign_wd")
+    r1 = P.run(spark, wd, "/root/testdata/sf0.001")
+    assert list(r1["stages"]) == ["ingest", "assign", "rollup", "tiles"]
+    # every geo span is assigned exactly once (PIP, kNN snap or none)
+    assert r1["stages"]["assign"]["rows"] == r1["stages"]["ingest"]["rows"] > 0
+    assert r1["stages"]["tiles"]["rows"] >= 1
+    assert all(s["sec"] >= 0 for s in r1["stages"].values())
+    r2 = P.run(spark, wd, "/root/testdata/sf0.001")
+    for name, s1 in r1["stages"].items():
+        assert r2["stages"][name]["rows"] == s1["rows"], name
+        assert r2["stages"][name]["partitions"] == s1["partitions"], name

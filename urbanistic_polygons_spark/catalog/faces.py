@@ -10,6 +10,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..datagen import ways_grid_df
 from ._shared import _pts_df
 
 # ---------------------------------------------------------------------------
@@ -17,20 +18,6 @@ from ._shared import _pts_df
 # sequential half-edge walk runs per-cell in applyInPandas -> rows-only
 # driver check; exactness is covered by the pytest oracle suite)
 # ---------------------------------------------------------------------------
-
-def _grid_graph(spark):
-    """Jitter-free lattice: node coordinates are the exact closed-form
-    doubles ``lon0 + gx*step`` / ``lat0 + gy*step``, so the DuckDB faces
-    oracle reconstructs every vertex (and bbox double) bit-for-bit.  The
-    jittered variant of the same fixture exercises robustness in pytest."""
-    from .. import datagen
-    nodes_pdf, ways_pdf = datagen.gen_ways_grid(k=6, seed=44, jitter=0.0)
-    nodes = spark.createDataFrame(
-        nodes_pdf, schema="node_id long, lon double, lat double")
-    ways = spark.createDataFrame(
-        ways_pdf, schema="way_id long, nodes array<long>, tags map<string,string>")
-    return nodes, ways
-
 
 _GRID_FACES_CACHE: dict[tuple, DataFrame] = {}
 
@@ -45,7 +32,7 @@ def _grid_faces(spark) -> DataFrame:
     df = _GRID_FACES_CACHE.get(key)
     if df is None:
         from ..operators.graph_build import build_faces_from_ways
-        nodes, ways = _grid_graph(spark)
+        nodes, ways = ways_grid_df(spark, 6)
         df = build_faces_from_ways(nodes, ways).localCheckpoint(eager=True)
         _GRID_FACES_CACHE[key] = df
     return df
@@ -120,33 +107,9 @@ def _grid_landuse(spark):
     memo = _GRID_LANDUSE_CACHE.get(key)
     if memo is not None:
         return memo
-    from ..operators.classify import classify_landuse_ways
-    nodes, ways = _grid_graph(spark)
-    lu = classify_landuse_ways(spark, ways)
-    # cls rides the explode + groupBy shuffle (FIRST per way) instead of a
-    # second way-keyed join-back — lu has ONE row per landuse way, the
-    # same cardinality as the rings, so a join here is an avoidable
-    # full-width shuffle at scale (and at fixture scale an SMJ in the
-    # audited plan)
-    pts = (lu.select("way_id", "cls",
-                     F.posexplode("nodes").alias("pos", "node_id"))
-           .join(nodes.select("node_id", "lon", "lat"), "node_id"))
-    rings = (
-        pts.groupBy("way_id")
-        .agg(F.array_sort(F.collect_list(F.struct("pos", "lon", "lat"))).alias("p"),
-             F.first("cls").alias("cls"))
-        .select(
-            F.col("way_id").alias("lu_id"),
-            "cls",
-            F.concat_ws(";", F.transform(
-                "p", lambda q: F.format_string("%.9f %.9f", q["lon"], q["lat"]))).alias("ring"),
-            F.array_min(F.transform("p", lambda q: q["lon"])).alias("min_lon"),
-            F.array_min(F.transform("p", lambda q: q["lat"])).alias("min_lat"),
-            F.array_max(F.transform("p", lambda q: q["lon"])).alias("max_lon"),
-            F.array_max(F.transform("p", lambda q: q["lat"])).alias("max_lat"),
-        )
-    )
-    rings = rings.localCheckpoint(eager=True)
+    from ..operators.landuse_join import landuse_rings
+    rings = landuse_rings(spark, *ways_grid_df(spark, 6)).localCheckpoint(
+        eager=True)
     _GRID_LANDUSE_CACHE[key] = rings
     return rings
 
@@ -585,7 +548,7 @@ def _merge_fixture(spark):
     from ..operators.landuse_join import assign_landuse, dominant_type
     from ..operators.merge import segment_resistance
 
-    nodes, ways = _grid_graph(spark)
+    nodes, ways = ways_grid_df(spark, 6)
     ways = ways.withColumn(
         "tags",
         F.when(F.col("way_id") == 3,

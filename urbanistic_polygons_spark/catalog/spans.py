@@ -50,3 +50,29 @@ def q_spans_spark(spark, sf_dir):
     return text_spans.unionByName(img_spans).unionByName(geo_spans)
 
 
+def spans_documents(spark, sf_dir) -> DataFrame:
+    """The documents table in input_hint shape, ``(doc_id, spans)``, folded
+    from :func:`q_spans_spark` in span order; geo spans' micro-coords are
+    mapped to the "lon,lat" text the engine parses."""
+    spans = q_spans_spark(spark, sf_dir)
+    xy = F.split("content", ",")
+    lonlat = F.concat(
+        ((xy.getItem(0).cast("double") / 10000 + 8300)
+         / 16384 * 360 - 180).cast("string"),
+        F.lit(","),
+        (F.lit(51.0) - xy.getItem(1).cast("double")
+         / 10000 * 0.01).cast("string"))
+    return (
+        spans.withColumn("content", F.when(F.col("kind") == "geo", lonlat)
+                         .otherwise(F.col("content")))
+        .groupBy("doc_id")
+        .agg(F.array_sort(F.collect_list(F.struct(
+            F.col("span_offset").alias("offset"), "kind",
+            F.col("content").alias("text"), "media_ref"))).alias("raw"))
+        .select(
+            F.col("doc_id").cast("string").alias("doc_id"),
+            F.transform("raw", lambda s: F.struct(
+                s["kind"].alias("kind"), s["text"].alias("text"),
+                s["media_ref"].alias("media_ref"),
+                s["offset"].cast("int").alias("offset"))).alias("spans"))
+    )

@@ -233,3 +233,17 @@ def documents_df(spark, n_docs: int, seed: int = 42, **kw):
 def polygons_df(spark, n_polys: int, seed: int = 43):
     return spark.createDataFrame(gen_polygons(n_polys, seed),
                                  schema=POLYGONS_SCHEMA)
+
+
+def ways_grid_df(spark, k: int):
+    """The jitter-free ``k`` x ``k`` lattice of :func:`gen_ways_grid` as
+    Spark ``(nodes, ways)`` frames.  Node coordinates are the exact
+    closed-form doubles ``lon0 + gx*step`` / ``lat0 + gy*step``, so the
+    DuckDB faces oracle reconstructs every vertex (and bbox double)
+    bit-for-bit."""
+    nodes_pdf, ways_pdf = gen_ways_grid(k=k, seed=44, jitter=0.0)
+    return (spark.createDataFrame(
+                nodes_pdf, schema="node_id long, lon double, lat double"),
+            spark.createDataFrame(
+                ways_pdf,
+                schema="way_id long, nodes array<long>, tags map<string,string>"))

@@ -18,6 +18,8 @@ nothing is O(n^2); AQE skew-join handles hot buckets.
 
 from __future__ import annotations
 
+import warnings
+
 from pyspark.sql import DataFrame, Observation, Window
 from pyspark.sql import functions as F
 
@@ -88,8 +90,8 @@ def cut_lineage(df: DataFrame, eager: bool = True) -> DataFrame:
     ``defaultSizeInBytes``; every join these loops run is
     corpus-proportional on both sides (never a broadcast candidate), so
     the reset costs nothing in plan quality.  Uses the classic-Dataset
-    internals via py4j; any drift in that internal API degrades
-    gracefully to a plain (un-stripped) checkpoint."""
+    internals via py4j; any drift in that internal API degrades to a
+    plain (un-stripped) checkpoint with a RuntimeWarning."""
     ck = df.localCheckpoint(eager=eager)
     try:
         spark = df.sparkSession
@@ -103,7 +105,14 @@ def cut_lineage(df: DataFrame, eager: bool = True) -> DataFrame:
         jnew = jvm.org.apache.spark.sql.classic.Dataset.ofRows(
             jdf.sparkSession(), stripped)
         return DataFrame(jnew, spark)
-    except Exception:
+    except Exception as exc:  # noqa: BLE001 — degrade, but loudly
+        # a fixed text, so the default warnings filter reports it once
+        # per call site instead of once per loop round
+        warnings.warn(
+            "dedup.cut_lineage could not strip originStats "
+            f"({type(exc).__name__}); falling back to a plain "
+            "localCheckpoint, so self-joining loops may square their join "
+            "estimates", RuntimeWarning, stacklevel=2)
         return ck
 
 

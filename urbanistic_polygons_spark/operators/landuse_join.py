@@ -29,6 +29,7 @@ from pyspark.sql import types as T
 
 from .. import kernels
 from ..functions import cells as C
+from . import classify
 
 
 def _parse_ring(s: str) -> np.ndarray:
@@ -65,6 +66,35 @@ def overlap_ratio_udf(face_ring: pd.Series, lu_ring: pd.Series) -> pd.Series:
             f[:, 0], f[:, 1], l[:, 0], l[:, 1])
         out[i] = min(inter / fa, 1.0)
     return pd.Series(out)
+
+
+def landuse_rings(spark, nodes: DataFrame, ways: DataFrame) -> DataFrame:
+    """Closed classified ways -> the landuse polygon layer (S8):
+    ``(lu_id, cls, ring, min_lon, min_lat, max_lon, max_lat)`` with the
+    ring in way node order."""
+    lu = classify.classify_landuse_ways(spark, ways)
+    # cls rides the explode + groupBy shuffle (FIRST per way) instead of a
+    # second way-keyed join-back — lu has ONE row per landuse way, the
+    # same cardinality as the rings, so a join here is an avoidable
+    # full-width shuffle at scale
+    pts = (lu.select("way_id", "cls",
+                     F.posexplode("nodes").alias("pos", "node_id"))
+           .join(nodes.select("node_id", "lon", "lat"), "node_id"))
+    return (
+        pts.groupBy("way_id")
+        .agg(F.array_sort(F.collect_list(F.struct("pos", "lon", "lat"))).alias("p"),
+             F.first("cls").alias("cls"))
+        .select(
+            F.col("way_id").alias("lu_id"),
+            "cls",
+            F.concat_ws(";", F.transform(
+                "p", lambda q: F.format_string("%.9f %.9f", q["lon"], q["lat"]))).alias("ring"),
+            F.array_min(F.transform("p", lambda q: q["lon"])).alias("min_lon"),
+            F.array_min(F.transform("p", lambda q: q["lat"])).alias("min_lat"),
+            F.array_max(F.transform("p", lambda q: q["lon"])).alias("max_lon"),
+            F.array_max(F.transform("p", lambda q: q["lat"])).alias("max_lat"),
+        )
+    )
 
 
 def _with_cells(df: DataFrame) -> DataFrame:

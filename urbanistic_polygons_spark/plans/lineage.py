@@ -60,6 +60,19 @@ def make_lineage_store(spark: SparkSession, root: str,
     return LineageStore(root)
 
 
+def stage_report(store: LineageStore, stages) -> dict:
+    """The pipelines' per-stage report, read from the snapshot log: rows
+    and partitions committed so far, and the wall seconds of the stage's
+    latest commit (this run's, on a resume that added nothing)."""
+    report = {}
+    for stage in stages:
+        c = store.counters(stage)
+        report[stage] = {
+            "rows": c.get("n_rows"), "partitions": c.get("n_partitions"),
+            "sec": round(store.snapshots(stage)[-1]["wall_s"], 2)}
+    return report
+
+
 class IcebergLineageStore:
     """The same checkpoint/read/rollback/maintenance surface as
     :class:`LineageStore`, mapped onto REAL Iceberg snapshot commits
@@ -192,10 +205,6 @@ class LineageStore:
     def _snapshots_path(self, stage: str) -> Path:
         return self.root / f"_snapshots_{stage}.json"
 
-    def _lineage_path(self, stage: str) -> Path:
-        # legacy aggregate counters (kept for the pipeline's stage report)
-        return self.root / f"_lineage_{stage}.json"
-
     @staticmethod
     def _atomic_write(path: Path, payload: dict) -> None:
         """Write-to-temp + rename: a crash mid-write must never truncate
@@ -245,10 +254,17 @@ class LineageStore:
         return sorted(parts)
 
     def counters(self, stage: str) -> dict:
-        p = self._lineage_path(stage)
-        if not p.exists():
+        """Aggregate counters of the visible snapshots, derived from the
+        snapshot log (its only record): {} until a snapshot is committed."""
+        snaps = self.snapshots(stage)
+        if not snaps:
             return {}
-        return json.loads(p.read_text())
+        parts = self.committed_partitions(stage)
+        return {"stage": stage, "partitions": parts,
+                "n_partitions": len(parts),
+                "n_rows": sum(s["rows_added"] for s in snaps),
+                "current_snapshot": snaps[-1]["snapshot_id"],
+                "committed_at": snaps[-1]["committed_at"]}
 
     # -- commit / read / rollback -------------------------------------------
 
@@ -271,6 +287,7 @@ class LineageStore:
         """One snapshot commit: append the not-yet-committed partitions
         under a fresh ``_commit`` id, record the snapshot, and return the
         manifest-scoped read-back (cuts the upstream plan)."""
+        t0 = time.perf_counter()
         spark = df.sparkSession
         # ids are monotonic across ROLLBACKS too ("last_id" survives a log
         # truncation): re-using a rolled-back id would resurrect that
@@ -315,18 +332,10 @@ class LineageStore:
             "added_partitions": sorted(added),
             "rows_added": rows_added,
             "committed_at": time.time(),
+            "wall_s": time.perf_counter() - t0,
         })
         self._atomic_write(self._snapshots_path(stage),
                            {"snapshots": snaps, "last_id": cid})
-        all_parts = self.committed_partitions(stage)
-        self._atomic_write(self._lineage_path(stage), {
-            "stage": stage,
-            "partitions": all_parts,
-            "n_partitions": len(all_parts),
-            "n_rows": sum(s["rows_added"] for s in snaps),
-            "current_snapshot": cid,
-            "committed_at": time.time(),
-        })
         if not any(s["added_partitions"] for s in snaps):
             # nothing has EVER been written for this stage: the directory
             # holds no parquet footers, so a read-back would fail schema
@@ -351,15 +360,6 @@ class LineageStore:
         keep = [s for s in log["snapshots"] if s["snapshot_id"] <= snapshot_id]
         self._atomic_write(self._snapshots_path(stage),
                            {"snapshots": keep, "last_id": log["last_id"]})
-        parts = self.committed_partitions(stage)
-        self._atomic_write(self._lineage_path(stage), {
-            "stage": stage,
-            "partitions": parts,
-            "n_partitions": len(parts),
-            "n_rows": sum(s["rows_added"] for s in keep),
-            "current_snapshot": snapshot_id if keep else None,
-            "committed_at": time.time(),
-        })
 
     def is_complete(self, stage: str, expected_partitions: int) -> bool:
         c = self.counters(stage)
@@ -377,7 +377,7 @@ class LineageStore:
         leaves either the old log (compaction invisible) or the new one
         (old commits orphaned — vacuum reclaims them); never data loss.
         Returns the new snapshot id."""
-        spark = SparkSession.getActiveSession()
+        t0 = time.perf_counter()
         log = self._log(stage)
         if len(log["snapshots"]) <= 1:
             return (log["snapshots"][0]["snapshot_id"]
@@ -409,19 +409,10 @@ class LineageStore:
                 "added_partitions": parts,
                 "rows_added": rows,
                 "committed_at": time.time(),
+                "wall_s": time.perf_counter() - t0,
                 "compacted_from": [s["snapshot_id"] for s in old],
             }],
             "last_id": cid,
-        })
-        # keep the legacy counters file in step (checkpoint/rollback do):
-        # stale counters would point current_snapshot at an expired id
-        self._atomic_write(self._lineage_path(stage), {
-            "stage": stage,
-            "partitions": parts,
-            "n_partitions": len(parts),
-            "n_rows": rows,
-            "current_snapshot": cid,
-            "committed_at": time.time(),
         })
         return cid
 
