@@ -6,12 +6,13 @@ with the merge phase the reference never implemented:
 
     spark-submit --py-files <zip> scripts/run_graph_pipeline.py <workdir> [k]
 
-Five stages, each an idempotent snapshot commit via
-plans.lineage.LineageStore (committed-partition anti-join = resume after
-a kill; GUID dedup on read):
+The ways become ONE planar barrier-edge set (graph_build.barrier_edges,
+materialized once); stages 1, 2 and 4 all read it.  Five stages, each an
+idempotent snapshot commit via plans.lineage.LineageStore
+(committed-partition anti-join = resume after a kill; GUID dedup on read):
 
-  1. graph    ways -> planarized standardized edges + vertex/edge tables
-              with content-addressed GUIDs, partitioned by tile
+  1. graph    edges -> G4-pruned vertex/edge tables with content-addressed
+              GUIDs, partitioned by tile
   2. faces    per-cell half-edge walk -> face polygons, GUID-deduped
   3. landuse  faces x landuse rings -> dominant class per face
   4. merge    resistance+similarity-gated region components
@@ -38,8 +39,7 @@ from urbanistic_polygons_spark import datagen  # noqa: E402
 from urbanistic_polygons_spark.operators.classify import (  # noqa: E402
     classify_barrier_ways)
 from urbanistic_polygons_spark.operators.graph_build import (  # noqa: E402
-    build_faces_from_ways, build_graph_tables, checkpoint_graph,
-    classify_barriers, planarize_edges, split_ways_to_edges)
+    barrier_edges, build_faces, build_graph_tables, checkpoint_graph)
 from urbanistic_polygons_spark.operators.landuse_join import (  # noqa: E402
     assign_landuse, dominant_type, landuse_rings)
 from urbanistic_polygons_spark.operators.merge import (  # noqa: E402
@@ -56,15 +56,15 @@ def run(spark, workdir: str, k: int = 6,
         merge_threshold: int = 3) -> dict:
     store = LineageStore(workdir)
     nodes, ways = datagen.ways_grid_df(spark, k)
+    edges = barrier_edges(nodes, ways).localCheckpoint(eager=True)
 
     # stage 1: entity tables (vertex/edge GUIDs = the cross-partition
     # join keys, reference TiledBarrierGraphSerializer.cs:14-85)
-    checkpoint_graph(store, *build_graph_tables(nodes, ways))
+    checkpoint_graph(store, *build_graph_tables(edges))
 
     # stage 2: faces (checkpoint consumed by every later stage: resume
     # after a kill re-reads the committed faces, never re-walks)
-    faces = store.checkpoint(build_faces_from_ways(nodes, ways), "faces",
-                             "anchor_cell")
+    faces = store.checkpoint(build_faces(edges), "faces", "anchor_cell")
     faces = faces.dropDuplicates(["face_guid"]).localCheckpoint(eager=True)
 
     # stage 3: dominant landuse per face
@@ -72,13 +72,7 @@ def run(spark, workdir: str, k: int = 6,
            .join(faces.select("face_guid", "anchor_cell"), "face_guid"))
     dom = store.checkpoint(dom, "landuse", "anchor_cell")
 
-    # stage 4: merge-by-similarity regions.  Edges MUST be planarized to
-    # match the faces (built with planarize_crossings=True): on crossing
-    # non-noded ways, face boundary segments split at the intersection
-    # point, and unplanarized edge unit segments would never match those
-    # keys -> every such boundary falls to _DEFAULT_RESISTANCE and
-    # legitimate merges are silently blocked.
-    edges = planarize_edges(split_ways_to_edges(nodes, classify_barriers(ways)))
+    # stage 4: merge-by-similarity regions
     seg_res = segment_resistance(edges, classify_barrier_ways(spark, ways))
     merged = merge_faces(faces, seg_res, merge_threshold,
                          dominant=dom.select("face_guid", "dominant_cls"))

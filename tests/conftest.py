@@ -1,4 +1,10 @@
+import os
+
 import pytest
+
+# with the 48g session default the test JVM grew past 9 GB RSS in
+# test_merge.py on a 15 GB host; an explicit setting still wins
+os.environ.setdefault("SPARK_DRIVER_MEMORY", "6g")
 
 
 @pytest.fixture(scope="session")

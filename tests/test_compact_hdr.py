@@ -7,7 +7,7 @@ guarantees — against hand-computed expectations."""
 
 from pyspark.sql import functions as F
 
-from urbanistic_polygons_spark.catalog import _rect_cells, _rects_df
+from urbanistic_polygons_spark.catalog._shared import _rect_cells, _rects_df
 from urbanistic_polygons_spark.operators.compact import (compact_cover,
                                                          uncompact_cover)
 from urbanistic_polygons_spark.operators.sketches import (hdr_cells,

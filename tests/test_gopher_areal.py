@@ -6,7 +6,7 @@ SEMANTICS against hand-computed expectations."""
 
 from pyspark.sql import functions as F
 
-from urbanistic_polygons_spark.catalog import _areal_terms
+from urbanistic_polygons_spark.catalog.spatial import _areal_terms
 from urbanistic_polygons_spark.functions import text as X
 
 SF = "/root/testdata/sf0.001"

@@ -70,12 +70,8 @@ def test_faces_partition_invariance(spark, grid):
 
 def test_build_faces_planarizes_crossings(spark):
     """End-to-end J4 wiring: a square with NON-NODED crossing diagonals
-    yields the 4 triangular faces only when planarize_crossings=True."""
-    from pyspark.sql import functions as F  # noqa: F401
-
-    from urbanistic_polygons_spark.operators.graph_build import (
-        build_faces_from_ways,
-    )
+    yields the 4 triangular faces only from the planarized edge set."""
+    from urbanistic_polygons_spark.operators.graph_build import build_faces
     B_LON, B_LAT, S = 4.78, 51.26, 0.004
     corners = [(1, B_LON, B_LAT), (2, B_LON + S, B_LAT),
                (3, B_LON + S, B_LAT + S), (4, B_LON, B_LAT + S)]
@@ -86,9 +82,9 @@ def test_build_faces_planarizes_crossings(spark):
          (11, [1, 3], tags),            # diagonal (crosses 12, not noded)
          (12, [2, 4], tags)],
         "way_id long, nodes array<long>, tags map<string,string>")
-    flat = build_faces_from_ways(nodes, ways, planarize_crossings=True)
+    flat = build_faces_from_ways(nodes, ways)
     n_flat = flat.count()
-    raw = build_faces_from_ways(nodes, ways, planarize_crossings=False)
+    raw = build_faces(split_ways_to_edges(nodes, classify_barriers(ways)))
     n_raw = raw.count()
     # 4 triangles + the unbounded exterior face (a fully-loaded graph's
     # outer walk closes and is a normal face — same convention as the
@@ -109,7 +105,7 @@ def test_graph_tables_guids_and_roundtrip(spark, tmp_path):
 
     from urbanistic_polygons_spark import kernels
     from urbanistic_polygons_spark.operators.graph_build import (
-        build_graph_tables, checkpoint_graph, read_graph,
+        barrier_edges, build_graph_tables, checkpoint_graph, read_graph,
     )
     from urbanistic_polygons_spark.plans.lineage import LineageStore
 
@@ -118,7 +114,7 @@ def test_graph_tables_guids_and_roundtrip(spark, tmp_path):
         nodes_pdf, schema="node_id long, lon double, lat double")
     ways = spark.createDataFrame(
         ways_pdf, schema="way_id long, nodes array<long>, tags map<string,string>")
-    vertices, edges = build_graph_tables(nodes, ways)
+    vertices, edges = build_graph_tables(barrier_edges(nodes, ways))
     vp = vertices.toPandas()
     ep = edges.toPandas()
 

@@ -643,7 +643,7 @@ def test_landuse_serve_mvt_layer(spark):
     blob carries a 'landuse' layer whose key table contains 'type' and
     whose value table contains every served class; per-tile feature
     counts match the type_summary column."""
-    from urbanistic_polygons_spark.catalog import _grid_landuse
+    from urbanistic_polygons_spark.catalog.faces import _grid_landuse
     from urbanistic_polygons_spark.sources.mvt import landuse_to_mvt
 
     out = landuse_to_mvt(_grid_landuse(spark), zoom=14).toPandas()

@@ -141,7 +141,7 @@ def test_dominance_gate_splits_regions(lattice):
     assert sizes == [3, 6]
 
 
-def test_graph_pipeline_stages_and_resume(spark, tmp_path):
+def test_graph_pipeline_stages_and_resume(spark, tmp_path, monkeypatch):
     """E2 bulk-build analog: the 5-stage graph pipeline (entity tables ->
     faces -> landuse -> merge -> tiles) commits LineageStore snapshots;
     a re-run with the same workdir skips every committed partition (adds
@@ -151,8 +151,20 @@ def test_graph_pipeline_stages_and_resume(spark, tmp_path):
     sys.path.insert(0, str(Path(__file__).resolve().parent.parent / "scripts"))
     import run_graph_pipeline as P
 
+    from urbanistic_polygons_spark.operators import graph_build
+
+    calls = []
+    planarize_edges = graph_build.planarize_edges
+
+    def counted(edges):
+        calls.append(1)
+        return planarize_edges(edges)
+
+    monkeypatch.setattr(graph_build, "planarize_edges", counted)
     wd = str(tmp_path / "graph_wd")
     r1 = P.run(spark, wd, k=4)
+    # one planar barrier-edge set feeds the entity tables, faces and merge
+    assert len(calls) == 1
     assert set(r1["stages"]) == {"graph_vertices", "graph_edges", "faces",
                                  "landuse", "merge", "tiles"}
     assert r1["stages"]["faces"]["rows"] == 10     # 3x3 + outer
@@ -166,13 +178,15 @@ def test_graph_pipeline_stages_and_resume(spark, tmp_path):
 
 
 def test_crossing_ways_boundary_segments_match(spark):
-    """TRUE crossing without a shared node (ADVICE r3): faces are built
-    with planarize_crossings=True, so their boundary segments split at
-    the intersection point.  segment_resistance fed UNPLANARIZED edges
-    leaves those keys unmatched (merge fails safe = blocked); fed
-    PLANARIZED edges (the pipeline's stage-4 form) every boundary
-    segment matches and the residential triangles merge."""
-    from urbanistic_polygons_spark.operators.graph_build import planarize_edges
+    """TRUE crossing without a shared node (ADVICE r3): the planar edge
+    set splits the diagonals at the intersection point, and so do the
+    face boundary segments built from it.  segment_resistance fed
+    UNPLANARIZED edges leaves those keys unmatched (merge fails safe =
+    blocked); fed the SAME barrier_edges result as the faces (the
+    pipeline's form) every boundary segment matches and the residential
+    triangles merge."""
+    from urbanistic_polygons_spark.operators.graph_build import (
+        barrier_edges, build_faces)
 
     b_lon, b_lat, s = 4.78, 51.26, 0.004
     nodes = spark.createDataFrame(
@@ -186,7 +200,8 @@ def test_crossing_ways_boundary_segments_match(spark):
          (12, [2, 4], tags)],           # crossing diagonal, NOT noded
         schema="way_id long, nodes array<long>, tags map<string,string>")
 
-    faces = build_faces_from_ways(nodes, ways).localCheckpoint(eager=True)
+    edges = barrier_edges(nodes, ways).localCheckpoint(eager=True)
+    faces = build_faces(edges).localCheckpoint(eager=True)
     inter = interior_faces(faces)
     assert inter.count() == 4           # 4 triangles
     segs = face_boundary_segments(inter)
@@ -200,7 +215,7 @@ def test_crossing_ways_boundary_segments_match(spark):
     raw_merged = merge_faces(faces, res_raw, threshold=3)
     assert raw_merged.select("region").distinct().count() == 4
 
-    res_pl = segment_resistance(planarize_edges(edges_raw), way_res)
+    res_pl = segment_resistance(edges, way_res)
     assert segs.join(res_pl, "seg_key", "left_anti").count() == 0
     merged = merge_faces(faces, res_pl, threshold=3)
     assert merged.select("region").distinct().count() == 1

@@ -7,7 +7,7 @@ import hashlib
 import pytest
 from pyspark.sql import functions as F
 
-from urbanistic_polygons_spark.catalog import q_spans_spark
+from urbanistic_polygons_spark.catalog.spans import q_spans_spark
 from urbanistic_polygons_spark.operators import multimodal as MM
 
 SF = "/root/testdata/sf0.001"

@@ -2,9 +2,12 @@
 intersections; a square with crossing diagonals yields 4 triangular faces
 + exterior after planarize -> faces."""
 
+import logging
+
 import pytest
 from pyspark.sql import functions as F
 
+from urbanistic_polygons_spark.operators import planarize as PL
 from urbanistic_polygons_spark.operators.faces import extract_faces
 from urbanistic_polygons_spark.operators.planarize import (
     find_intersections, planarize,
@@ -42,15 +45,29 @@ def test_find_intersections_center(spark):
     assert hits.lat.map(lambda v: abs(v - (B_LAT + S / 2)) < 1e-9).all()
 
 
-def test_planarize_splits_diagonals(spark):
+def test_planarize_splits_diagonals(spark, caplog):
     edges = _square_with_diagonals(spark)
-    flat = planarize(edges).toPandas()
+    with caplog.at_level(logging.WARNING, logger=PL.__name__):
+        flat = planarize(edges).toPandas()
+    # planar within PLANARIZE_MAX_ROUNDS: no warning
+    assert not [r for r in caplog.records if r.name == PL.__name__]
     # 4 sides + 4 half-diagonals
     assert len(flat) == 8
     # and is now intersection-free
     again = find_intersections(
         spark.createDataFrame(flat, EDGE_SCHEMA))
     assert again.isEmpty()
+
+
+def test_planarize_round_bound_warns(spark, caplog, monkeypatch):
+    # with one round the split result is never re-checked: the bound is
+    # hit while still splitting, and that is logged
+    monkeypatch.setattr(PL, "PLANARIZE_MAX_ROUNDS", 1)
+    with caplog.at_level(logging.WARNING, logger=PL.__name__):
+        flat = planarize(_square_with_diagonals(spark))
+    assert flat.count() == 8
+    assert any("PLANARIZE_MAX_ROUNDS" in r.getMessage()
+               for r in caplog.records)
 
 
 def test_faces_after_planarize(spark):

@@ -1,8 +1,11 @@
 """G4 declarative shape-point pruning (degree-2 chain contraction) —
 reference TiledBarrierGraphExtensions.cs:214-255 semantics."""
 
+import logging
+
 from pyspark.sql import functions as F
 
+from urbanistic_polygons_spark.operators import graph_build
 from urbanistic_polygons_spark.operators.graph_build import prune_shape_points
 
 COLS = ("way_id", "seg", "v1_lon", "v1_lat", "v2_lon", "v2_lat",
@@ -23,20 +26,36 @@ def _edges(spark, rows):
               "min_lon double, min_lat double, max_lon double, max_lat double")
 
 
-def test_chain_collapses_to_one_edge(spark):
+def _chain(spark):
     # A(0,0) - B(1,0) - C(2,0) - D(3,0), one way, one shape pt on the middle
-    e = _edges(spark, [
+    return _edges(spark, [
         (7, 0, (0.0, 0.0), (1.0, 0.0), []),
         (7, 1, (1.0, 0.0), (2.0, 0.0), [(1.5, 0.1)]),
         (7, 2, (2.0, 0.0), (3.0, 0.0), []),
     ])
-    out = prune_shape_points(e).collect()
+
+
+def test_chain_collapses_to_one_edge(spark, caplog):
+    with caplog.at_level(logging.WARNING, logger=graph_build.__name__):
+        out = prune_shape_points(_chain(spark)).collect()
+    # converged within PRUNE_MAX_ROUNDS: no warning
+    assert not [r for r in caplog.records if r.name == graph_build.__name__]
     assert len(out) == 1
     r = out[0]
     assert (r.v1_lon, r.v2_lon) == (0.0, 3.0)  # standardized west->east
     mids = [tuple(map(float, p.split(" "))) for p in r.shape_pts.split(";")]
     assert mids == [(1.0, 0.0), (1.5, 0.1), (2.0, 0.0)]
     assert (r.min_lon, r.max_lon, r.max_lat) == (0.0, 3.0, 0.1)
+
+
+def test_round_bound_warns(spark, caplog, monkeypatch):
+    # one round contracts only B (C conflicts on the shared middle edge):
+    # the bound stops a still-contracting chain, and says so
+    monkeypatch.setattr(graph_build, "PRUNE_MAX_ROUNDS", 1)
+    with caplog.at_level(logging.WARNING, logger=graph_build.__name__):
+        out = prune_shape_points(_chain(spark)).collect()
+    assert len(out) == 2
+    assert any("PRUNE_MAX_ROUNDS" in r.getMessage() for r in caplog.records)
 
 
 def test_degree4_vertex_untouched(spark):

@@ -33,10 +33,3 @@ in ``registry.build_catalog``):
 
 from ._shared import TABLES, register_views  # noqa: F401
 from .registry import build_catalog  # noqa: F401
-
-# compatibility surface for tests/tools that imported from the old
-# monolithic module
-from ._shared import _rect_cells, _rects_df  # noqa: F401
-from .faces import _grid_faces, _grid_landuse  # noqa: F401
-from .spans import q_spans_spark  # noqa: F401
-from .spatial import _areal_terms  # noqa: F401

@@ -31,9 +31,9 @@ def _grid_faces(spark) -> DataFrame:
     key = (id(spark), spark.sparkContext.applicationId)
     df = _GRID_FACES_CACHE.get(key)
     if df is None:
-        from ..operators.graph_build import build_faces_from_ways
+        from ..operators.graph_build import barrier_edges, build_faces
         nodes, ways = ways_grid_df(spark, 6)
-        df = build_faces_from_ways(nodes, ways).localCheckpoint(eager=True)
+        df = build_faces(barrier_edges(nodes, ways)).localCheckpoint(eager=True)
         _GRID_FACES_CACHE[key] = df
     return df
 
@@ -543,8 +543,7 @@ def _merge_fixture(spark):
     unit segments, and per-face dominant landuse.  Face GEOMETRY is
     tag-independent, so the memoized fixture faces are reused."""
     from ..operators.classify import classify_barrier_ways
-    from ..operators.graph_build import (classify_barriers, planarize_edges,
-                                        split_ways_to_edges)
+    from ..operators.graph_build import barrier_edges
     from ..operators.landuse_join import assign_landuse, dominant_type
     from ..operators.merge import segment_resistance
 
@@ -557,8 +556,8 @@ def _merge_fixture(spark):
               F.create_map(F.lit("highway"), F.lit("tertiary")))
         .otherwise(F.col("tags")))
     faces = _grid_faces(spark)
-    edges = planarize_edges(split_ways_to_edges(nodes, classify_barriers(ways)))
-    seg_res = segment_resistance(edges, classify_barrier_ways(spark, ways))
+    seg_res = segment_resistance(barrier_edges(nodes, ways),
+                                 classify_barrier_ways(spark, ways))
     dom = dominant_type(assign_landuse(faces, _grid_landuse(spark)))
     return faces, seg_res, dom
 

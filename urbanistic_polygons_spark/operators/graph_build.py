@@ -17,8 +17,18 @@ the reference's imperative builder:
                         cells their bbox covers (tools/.../Program.cs:43-147
                         pass-1/pass-2 ingest, but as one shuffle)
 
-Pruning (G3/G4) happens inside the per-cell kernel (operators/faces.py)
-because it is tile-local and must respect halo suppression.
+One planar barrier-edge set per job: ``barrier_edges`` is the only recipe
+(classify -> split -> planarize, the reference's AddEdgeFlattened on every
+added edge, TiledBarrierGraphExtensions.cs:39-137), and the entity tables,
+the faces and the merge weights all consume that one DataFrame — face
+boundary segments and resistance segments cannot diverge.  The edge
+encoding (west->east orientation, ``'lon lat;...'`` shape string, bbox)
+and the running-sum segmentation are defined once here and shared with
+operators/planarize.
+
+Pruning: the tile-local G3/G4 pass runs inside the per-cell face kernel
+(operators/faces.py, it must respect halo suppression); the global G4
+pre-pass for the entity tables is ``prune_shape_points`` below.
 """
 
 from __future__ import annotations
@@ -32,14 +42,16 @@ from ..functions import cells as C
 
 log = logging.getLogger(__name__)
 
+BARRIER_KEYS = ("highway", "waterway", "railway", "barrier")
+PRUNE_MAX_ROUNDS = 16  # G4 contraction rounds (chains shrink geometrically)
 
-def classify_barriers(ways: DataFrame, barrier_keys=("highway", "waterway",
-                                                     "railway", "barrier")) -> DataFrame:
+
+def classify_barriers(ways: DataFrame) -> DataFrame:
     """F1 isBarrier predicate: keep ways whose tags contain a barrier key
     (reference BarrierInfo.cs:45-73 + DefaultMergeFactorCalculator.cs:14-32;
     the full 17-row weight dim lives in operators/classify.py)."""
     cond = None
-    for k in barrier_keys:
+    for k in BARRIER_KEYS:
         c = F.map_contains_key(F.col("tags"), F.lit(k))
         cond = c if cond is None else (cond | c)
     return ways.filter(cond)
@@ -81,6 +93,82 @@ def tag_signature(tags_col) -> F.Column:
         lambda e: F.concat_ws("=", e["key"], e["value"])))))
 
 
+def _reverse_shape(shape: F.Column) -> F.Column:
+    """Reverse a ``'lon lat;...'`` shape string point by point."""
+    return F.concat_ws(";", F.reverse(F.split(shape, ";")))
+
+
+def _split_at_vertices(points: DataFrame, key: str, order: str) -> DataFrame:
+    """G2 segmentation: points (``key``, ``order``, lon, lat, is_vertex) ->
+    one row per vertex-to-vertex segment (``key``, seg, pts, a_lon, a_lat,
+    b_lon, b_lat, mid_str): ``pts`` the ordered point structs, a/b the
+    first/last point and ``mid_str`` the interior points a->b encoded
+    ``'lon lat;...'``.
+
+    With vseq = running count of vertices up to and including a point, a
+    vertex OPENS segment vseq-1 and CLOSES segment vseq-2; a shape point
+    belongs to segment vseq-1.  Vertices are emitted twice (head + tail) so
+    both neighboring segments get the boundary node."""
+    w = Window.partitionBy(key).orderBy(order)
+    points = points.withColumn(
+        "vseq", F.sum(F.col("is_vertex").cast("int")).over(w))
+    head = points.withColumn("seg", F.col("vseq") - 1)
+    tail = points.filter(F.col("is_vertex")).withColumn("seg", F.col("vseq") - 2)
+    seg_pts = (
+        head.unionByName(tail).filter(F.col("seg") >= 0)
+        .groupBy(key, "seg")
+        .agg(F.array_sort(F.collect_list(F.struct(order, "lon", "lat"))).alias("pts"))
+        .filter(F.size("pts") >= 2)
+    )
+    first = F.element_at("pts", 1)
+    last = F.element_at("pts", -1)
+    mids = F.slice(F.col("pts"), 2, F.greatest(F.size("pts") - 2, F.lit(0)))
+    return seg_pts.select(
+        key, "seg", "pts",
+        first["lon"].alias("a_lon"), first["lat"].alias("a_lat"),
+        last["lon"].alias("b_lon"), last["lat"].alias("b_lat"),
+        F.concat_ws(";", F.transform(
+            mids, lambda p: F.format_string("%.9f %.9f", p["lon"], p["lat"]))).alias("mid_str"))
+
+
+def _standardized() -> list[F.Column]:
+    """G5 standardize (TiledBarrierGraphExtensions.cs:299-318) over the
+    columns a_lon, a_lat, b_lon, b_lat, mid_str: v1 = the western
+    endpoint, the shape reversed when the endpoints swap, an empty shape
+    NULL — load-order independence.  Returns the v1_lon, v1_lat, v2_lon,
+    v2_lat, shape_pts columns."""
+    fwd = F.col("a_lon") < F.col("b_lon")
+    mid = F.col("mid_str")
+    return [
+        F.when(fwd, F.col("a_lon")).otherwise(F.col("b_lon")).alias("v1_lon"),
+        F.when(fwd, F.col("a_lat")).otherwise(F.col("b_lat")).alias("v1_lat"),
+        F.when(fwd, F.col("b_lon")).otherwise(F.col("a_lon")).alias("v2_lon"),
+        F.when(fwd, F.col("b_lat")).otherwise(F.col("a_lat")).alias("v2_lat"),
+        F.when(mid == "", F.lit(None)).otherwise(
+            F.when(fwd, mid).otherwise(_reverse_shape(mid))).alias("shape_pts"),
+    ]
+
+
+def _with_bbox(edges: DataFrame) -> DataFrame:
+    """Append the edge bbox (min_lon, min_lat, max_lon, max_lat) over v1,
+    the parsed ``shape_pts`` and v2."""
+    shape_tokens = F.filter(
+        F.split(F.coalesce("shape_pts", F.lit("")), ";"),
+        lambda p: F.length(p) > 0)  # ANSI mode: never cast '' to double
+    shape_lons = F.transform(shape_tokens,
+                             lambda p: F.split(p, " ")[0].cast("double"))
+    shape_lats = F.transform(shape_tokens,
+                             lambda p: F.split(p, " ")[1].cast("double"))
+    all_lons = F.concat(F.array("v1_lon", "v2_lon"), shape_lons)
+    all_lats = F.concat(F.array("v1_lat", "v2_lat"), shape_lats)
+    return edges.select(
+        "*",
+        F.array_min(all_lons).alias("min_lon"),
+        F.array_min(all_lats).alias("min_lat"),
+        F.array_max(all_lons).alias("max_lon"),
+        F.array_max(all_lats).alias("max_lat"))
+
+
 def split_ways_to_edges(nodes: DataFrame, ways: DataFrame) -> DataFrame:
     """G2 + G5: barrier ways -> standardized edges.
 
@@ -89,48 +177,12 @@ def split_ways_to_edges(nodes: DataFrame, ways: DataFrame) -> DataFrame:
     """
     ways = ways.withColumn("tag_sig", tag_signature(F.col("tags")))
     wn = resolve_way_nodes(nodes, ways)
-    verts = detect_vertices(wn)
-    wn = wn.join(verts, "node_id")
-
-    # segment numbering: with vseq = running count of vertices up to and
-    # including this pos, a vertex OPENS segment vseq-1 and CLOSES segment
-    # vseq-2; a shape point belongs to segment vseq-1.  Vertices are emitted
-    # twice (head + tail) so both neighboring segments get the boundary node.
-    w = Window.partitionBy("way_id").orderBy("pos")
-    wn = wn.withColumn(
-        "vseq", F.sum(F.col("is_vertex").cast("int")).over(w))
-    head = wn.withColumn("seg", F.col("vseq") - 1)
-    tail = wn.filter(F.col("is_vertex")).withColumn("seg", F.col("vseq") - 2)
-    both = head.unionByName(tail).filter(F.col("seg") >= 0)
-
-    seg_pts = (
-        both.groupBy("way_id", "seg")
-        .agg(F.array_sort(F.collect_list(F.struct("pos", "lon", "lat"))).alias("pts"))
-        .filter(F.size("pts") >= 2)
-    )
-    first = F.element_at("pts", 1)
-    last = F.element_at("pts", -1)
-    mids = F.slice(F.col("pts"), 2, F.greatest(F.size("pts") - 2, F.lit(0)))
-    edges = seg_pts.select(
-        "way_id", "seg",
-        first["lon"].alias("a_lon"), first["lat"].alias("a_lat"),
-        last["lon"].alias("b_lon"), last["lat"].alias("b_lat"),
-        F.concat_ws(";", F.transform(
-            mids, lambda p: F.format_string("%.9f %.9f", p["lon"], p["lat"]))).alias("mid_str"),
-        F.transform("pts", lambda p: p["lon"]).alias("all_lons"),
-        F.transform("pts", lambda p: p["lat"]).alias("all_lats"),
-    )
-    # G5 standardize: v1 = western endpoint; reverse shape when swapping
-    fwd = F.col("a_lon") < F.col("b_lon")
-    rev_mid = F.concat_ws(";", F.reverse(F.split(F.col("mid_str"), ";")))
-    edges = edges.select(
-        "way_id", "seg",
-        F.when(fwd, F.col("a_lon")).otherwise(F.col("b_lon")).alias("v1_lon"),
-        F.when(fwd, F.col("a_lat")).otherwise(F.col("b_lat")).alias("v1_lat"),
-        F.when(fwd, F.col("b_lon")).otherwise(F.col("a_lon")).alias("v2_lon"),
-        F.when(fwd, F.col("b_lat")).otherwise(F.col("a_lat")).alias("v2_lat"),
-        F.when(F.col("mid_str") == "", F.lit(None)).otherwise(
-            F.when(fwd, F.col("mid_str")).otherwise(rev_mid)).alias("shape_pts"),
+    segs = _split_at_vertices(wn.join(detect_vertices(wn), "node_id"),
+                              "way_id", "pos").withColumns({
+        "all_lons": F.transform("pts", lambda p: p["lon"]),
+        "all_lats": F.transform("pts", lambda p: p["lat"])})
+    edges = segs.select(
+        "way_id", "seg", *_standardized(),
         F.array_min("all_lons").alias("min_lon"),
         F.array_min("all_lats").alias("min_lat"),
         F.array_max("all_lons").alias("max_lon"),
@@ -141,7 +193,7 @@ def split_ways_to_edges(nodes: DataFrame, ways: DataFrame) -> DataFrame:
     return edges.join(ways.select("way_id", "tag_sig"), "way_id")
 
 
-def prune_shape_points(edges: DataFrame, max_rounds: int = 16) -> DataFrame:
+def prune_shape_points(edges: DataFrame) -> DataFrame:
     """G4 (declarative variant): contract degree-2 vertices by merging their
     two incident edges, shapes concatenated through the removed vertex —
     reference TiledBarrierGraphExtensions.cs:214-255.
@@ -155,9 +207,11 @@ def prune_shape_points(edges: DataFrame, max_rounds: int = 16) -> DataFrame:
     Round-based chain contraction: each round merges a conflict-free set of
     degree-2 vertices (an edge merges only at the vertex that is its
     smallest candidate key), contracting every chain by a constant factor
-    per round — a length-L chain collapses in O(log L) rounds.  At scale each round is two narrow shuffles
-    (degree count + merge join); the in-kernel variant in operators/faces.py
-    covers the tile-local case, this one the global pre-pass.
+    per round — a length-L chain collapses in O(log L) rounds; if round
+    PRUNE_MAX_ROUNDS still contracts, a warning is logged.  At scale each
+    round is two narrow shuffles (degree count + merge join); the in-kernel
+    variant in operators/faces.py covers the tile-local case, this one the
+    global pre-pass.
     """
     vkey1 = F.format_string("%.9f %.9f", F.col("v1_lon"), F.col("v1_lat"))
     vkey2 = F.format_string("%.9f %.9f", F.col("v2_lon"), F.col("v2_lat"))
@@ -166,7 +220,7 @@ def prune_shape_points(edges: DataFrame, max_rounds: int = 16) -> DataFrame:
     has_sig = "tag_sig" in edges.columns
     sig = F.col("tag_sig") if has_sig else F.col("way_id").cast("string")
 
-    for _ in range(max_rounds):
+    for _ in range(PRUNE_MAX_ROUNDS):
         e = edges.withColumn("ekey", ekey).withColumn(
             "vk1", vkey1).withColumn("vk2", vkey2).withColumn("sig", sig)
         not_loop = e.filter(F.col("vk1") != F.col("vk2"))
@@ -193,7 +247,7 @@ def prune_shape_points(edges: DataFrame, max_rounds: int = 16) -> DataFrame:
               .filter((F.col("m1") == F.col("vk")) & (F.col("m2") == F.col("vk")))
               .select("vk", "e1", "e2"))
         if ok.isEmpty():
-            return edges
+            break
         # orient each merging edge to END at the removed vertex, then chain
         sides = (ok.select("vk", F.col("e1").alias("ekey"), F.lit(1).alias("side"))
                  .unionByName(ok.select("vk", F.col("e2").alias("ekey"),
@@ -205,7 +259,7 @@ def prune_shape_points(edges: DataFrame, max_rounds: int = 16) -> DataFrame:
         # shape oriented far -> vk
         shp = F.when(at_v2, F.col("shape_pts")).otherwise(
             F.when(F.col("shape_pts").isNull(), F.lit(None)).otherwise(
-                F.concat_ws(";", F.reverse(F.split(F.col("shape_pts"), ";")))))
+                _reverse_shape(F.col("shape_pts"))))
         m = m.select("vk", "side", "way_id", "seg", "sig",
                      far_lon.alias("f_lon"), far_lat.alias("f_lat"),
                      shp.alias("shp"))
@@ -229,37 +283,12 @@ def prune_shape_points(edges: DataFrame, max_rounds: int = 16) -> DataFrame:
                 F.concat_ws(";", F.filter(F.array(
                     F.col("a.shp"), F.col("vk"),
                     F.when(F.col("b.shp").isNull(), F.lit(None)).otherwise(
-                        F.concat_ws(";", F.reverse(F.split(F.col("b.shp"), ";"))))
+                        _reverse_shape(F.col("b.shp")))
                 ), lambda x: x.isNotNull())).alias("mid_str"))
         )
-        fwd = F.col("a_lon") < F.col("b_lon")
-        rev_mid = F.concat_ws(";", F.reverse(F.split(F.col("mid_str"), ";")))
         sig_cols = [F.col("sig").alias("tag_sig")] if has_sig else []
-        new_edges = merged.select(
-            "way_id", "seg", *sig_cols,
-            F.when(fwd, F.col("a_lon")).otherwise(F.col("b_lon")).alias("v1_lon"),
-            F.when(fwd, F.col("a_lat")).otherwise(F.col("b_lat")).alias("v1_lat"),
-            F.when(fwd, F.col("b_lon")).otherwise(F.col("a_lon")).alias("v2_lon"),
-            F.when(fwd, F.col("b_lat")).otherwise(F.col("a_lat")).alias("v2_lat"),
-            F.when(F.col("mid_str") == "", F.lit(None)).otherwise(
-                F.when(fwd, F.col("mid_str")).otherwise(rev_mid)).alias("shape_pts"),
-        )
-        # recompute bbox over endpoints + shape
-        shape_tokens = F.filter(
-            F.split(F.coalesce("shape_pts", F.lit("")), ";"),
-            lambda p: F.length(p) > 0)  # ANSI mode: never cast '' to double
-        shape_lons = F.transform(shape_tokens,
-                                 lambda p: F.split(p, " ")[0].cast("double"))
-        shape_lats = F.transform(shape_tokens,
-                                 lambda p: F.split(p, " ")[1].cast("double"))
-        all_lons = F.concat(F.array("v1_lon", "v2_lon"), shape_lons)
-        all_lats = F.concat(F.array("v1_lat", "v2_lat"), shape_lats)
-        new_edges = new_edges.select(
-            "*",
-            F.array_min(all_lons).alias("min_lon"),
-            F.array_min(all_lats).alias("min_lat"),
-            F.array_max(all_lons).alias("max_lon"),
-            F.array_max(all_lats).alias("max_lat"))
+        new_edges = _with_bbox(
+            merged.select("way_id", "seg", *sig_cols, *_standardized()))
         dropped = (sides.select("ekey").distinct())
         survivors = (e.join(dropped, "ekey", "left_anti")
                      .select(*[c for c in edges.columns]))
@@ -268,6 +297,11 @@ def prune_shape_points(edges: DataFrame, max_rounds: int = 16) -> DataFrame:
         # times over); localCheckpoint materializes this round's result
         edges = (survivors.unionByName(new_edges.select(*edges.columns))
                  .localCheckpoint(eager=True))
+    else:
+        log.warning(
+            "prune_shape_points: round %d (PRUNE_MAX_ROUNDS) still "
+            "contracted vertices; degree-2 chains may remain",
+            PRUNE_MAX_ROUNDS)
     return edges
 
 
@@ -320,21 +354,8 @@ def planarize_edges(edges: DataFrame) -> DataFrame:
                        F.split("edge_key", "#").getItem(0).cast("long"))
            .withColumn("seg", F.row_number().over(w) - 1)
            .drop("edge_key"))
-    shape_tokens = F.filter(
-        F.split(F.coalesce("shape_pts", F.lit("")), ";"),
-        lambda p: F.length(p) > 0)  # ANSI mode: never cast '' to double
-    shape_lons = F.transform(shape_tokens,
-                             lambda p: F.split(p, " ")[0].cast("double"))
-    shape_lats = F.transform(shape_tokens,
-                             lambda p: F.split(p, " ")[1].cast("double"))
-    all_lons = F.concat(F.array("v1_lon", "v2_lon"), shape_lons)
-    all_lats = F.concat(F.array("v1_lat", "v2_lat"), shape_lats)
-    flat_edges = out.select(
-        "way_id", "seg", "v1_lon", "v1_lat", "v2_lon", "v2_lat", "shape_pts",
-        F.array_min(all_lons).alias("min_lon"),
-        F.array_min(all_lats).alias("min_lat"),
-        F.array_max(all_lons).alias("max_lon"),
-        F.array_max(all_lats).alias("max_lat"))
+    flat_edges = _with_bbox(out.select(
+        "way_id", "seg", "v1_lon", "v1_lat", "v2_lon", "v2_lat", "shape_pts"))
     if "tag_sig" in edges.columns:  # re-attach the per-way G4 signature
         flat_edges = flat_edges.join(
             edges.select("way_id", "tag_sig").distinct(), "way_id")
@@ -396,14 +417,21 @@ def _edge_guids_kernel(batches):
             "v2_lon": pdf["v2_lon"], "v2_lat": pdf["v2_lat"]})
 
 
-def build_graph_tables(nodes: DataFrame, ways: DataFrame,
-                       planarize_crossings: bool = True,
-                       prune: bool = True) -> tuple[DataFrame, DataFrame]:
+def barrier_edges(nodes: DataFrame, ways: DataFrame) -> DataFrame:
+    """The job's one planar barrier-edge set: barrier ways -> standardized
+    edges (G2 + G5) -> planarized (J4).  The entity tables, the faces and
+    the merge weights all read this one result, so its planarization is
+    the one every consumer sees."""
+    return planarize_edges(split_ways_to_edges(nodes, classify_barriers(ways)))
+
+
+def build_graph_tables(edges: DataFrame) -> tuple[DataFrame, DataFrame]:
     """The reference's full per-tile graph artifact: VERTICES and EDGES
     tables with content-addressed GUIDs — the cross-partition join keys
-    (SURVEY §1.1) — alongside the faces that build_faces_from_ways emits
-    (reference Serialization/TiledBarrierGraphSerializer.cs:14-85
-    checkpoints all three per tile).
+    (SURVEY §1.1) — alongside the faces that build_faces emits from the
+    same ``barrier_edges`` (reference
+    Serialization/TiledBarrierGraphSerializer.cs:14-85 checkpoints all
+    three per tile).
 
     Returns (vertices, edges):
       vertices(vertex_guid, tile_id, lon, lat) — endpoint vertices,
@@ -411,12 +439,7 @@ def build_graph_tables(nodes: DataFrame, ways: DataFrame,
       edges(edge_guid, v1_guid, v2_guid, v1_tile, v2_tile, way_id, seg,
         tag_sig, shape_pts, v1_lon..v2_lat) — standardized, G4-contracted.
     """
-    barriers = classify_barriers(ways)
-    edges = split_ways_to_edges(nodes, barriers)
-    if planarize_crossings:
-        edges = planarize_edges(edges)
-    if prune:
-        edges = prune_shape_points(edges)
+    edges = prune_shape_points(edges)
     g_edges = edges.mapInPandas(_edge_guids_kernel, GRAPH_EDGES_SCHEMA)
     v1 = g_edges.select(F.col("v1_guid").alias("vertex_guid"),
                         F.col("v1_tile").alias("tile_id"),
@@ -430,31 +453,26 @@ def build_graph_tables(nodes: DataFrame, ways: DataFrame,
     return vertices, g_edges
 
 
-def checkpoint_graph(store, vertices: DataFrame, edges: DataFrame,
-                     stage_prefix: str = "graph"):
+def checkpoint_graph(store, vertices: DataFrame, edges: DataFrame):
     """S4 for the entity tables: snapshot-commit vertices/edges through the
     LineageStore partitioned by tile, returning the manifest-scoped
     GUID-deduped read-back (resume re-processes only uncommitted tiles)."""
-    v = store.checkpoint(vertices, f"{stage_prefix}_vertices", "tile_id")
-    e = store.checkpoint(edges, f"{stage_prefix}_edges", "v1_tile")
+    v = store.checkpoint(vertices, "graph_vertices", "tile_id")
+    e = store.checkpoint(edges, "graph_edges", "v1_tile")
     return (v.dropDuplicates(["vertex_guid"]),
             e.dropDuplicates(["edge_guid"]))
 
 
-def read_graph(store, stage_prefix: str = "graph"):
+def read_graph(store):
     """Read the checkpointed entity tables with cross-tile GUID dedup —
     the reference dedups vertices/edges when composing tiles on read
     (TiledPolygonGraphExtensions.cs:17-119)."""
-    return (store.read(f"{stage_prefix}_vertices")
-            .dropDuplicates(["vertex_guid"]),
-            store.read(f"{stage_prefix}_edges")
-            .dropDuplicates(["edge_guid"]))
+    return (store.read("graph_vertices").dropDuplicates(["vertex_guid"]),
+            store.read("graph_edges").dropDuplicates(["edge_guid"]))
 
 
-def build_faces_from_ways(nodes: DataFrame, ways: DataFrame,
-                          max_ring: int = 4,
-                          planarize_crossings: bool = True) -> DataFrame:
-    """End-to-end: barrier ways -> planar edges -> per-cell face polygons
+def build_faces(edges: DataFrame, max_ring: int = 4) -> DataFrame:
+    """Planar barrier edges (``barrier_edges``) -> per-cell face polygons
     with content-addressed GUIDs, cross-cell dedup'd.
 
     G6 missing-tile expansion, batched: anchors whose face walks leave their
@@ -465,10 +483,6 @@ def build_faces_from_ways(nodes: DataFrame, ways: DataFrame,
     """
     from .faces import extract_faces
 
-    barriers = classify_barriers(ways)
-    edges = split_ways_to_edges(nodes, barriers)
-    if planarize_crossings:
-        edges = planarize_edges(edges)
     edges = edges.cache()
 
     results = []
@@ -491,7 +505,7 @@ def build_faces_from_ways(nodes: DataFrame, ways: DataFrame,
             # implicit unbounded face) are dropped, but never silently:
             n_incomplete = retry_anchors.count()
             log.warning(
-                "build_faces_from_ways: %d anchor cell(s) still had "
+                "build_faces: %d anchor cell(s) still had "
                 "incomplete face walks at max_ring=%d; their oversized "
                 "faces (usually the unbounded outer face) are omitted",
                 n_incomplete, max_ring)
@@ -501,3 +515,9 @@ def build_faces_from_ways(nodes: DataFrame, ways: DataFrame,
     for r in results[1:]:
         faces = faces.unionByName(r)
     return faces.dropDuplicates(["face_guid"])
+
+
+def build_faces_from_ways(nodes: DataFrame, ways: DataFrame,
+                          max_ring: int = 4) -> DataFrame:
+    """End-to-end: barrier ways -> planar edges -> faces."""
+    return build_faces(barrier_edges(nodes, ways), max_ring)

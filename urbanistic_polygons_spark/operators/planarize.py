@@ -12,12 +12,15 @@ spatial SELF-JOIN per round:
 3. vectorized proper-intersection solve (2x2 cross-product form) in one
    Arrow batch — proper only: endpoint touches are NOT intersections,
    matching NTS RobustLineIntersector's IsProper gate;
-4. split both edges at their hit parameters (the G2 running-sum segment
-   machinery re-applied over the augmented point list);
+4. split both edges at their hit parameters (graph_build's G2 running-sum
+   segmentation and G5 standardize re-applied over the augmented point
+   list);
 5. iterate to fixpoint (OSM data is mostly pre-noded: <= 2 rounds).
 """
 
 from __future__ import annotations
+
+import logging
 
 import numpy as np
 import pandas as pd
@@ -26,6 +29,11 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..functions import cells as C
+from .graph_build import _split_at_vertices, _standardized
+
+log = logging.getLogger(__name__)
+
+PLANARIZE_MAX_ROUNDS = 3
 
 _EDGE_COLS = ["edge_key", "v1_lon", "v1_lat", "v2_lon", "v2_lat", "shape_pts"]
 
@@ -156,50 +164,26 @@ def split_edges_at(edges: DataFrame, splits: DataFrame) -> DataFrame:
         F.lit(False).alias("is_split"))
     aug = pts.unionByName(splits.select(
         "edge_key", "ord", "lon", "lat", F.lit(True).alias("is_split")))
-    w = Window.partitionBy("edge_key").orderBy("ord")
     wend = Window.partitionBy("edge_key")
-    aug = aug.withColumns({
-        "is_vertex": (F.col("is_split")
+    aug = aug.withColumn(
+        "is_vertex", (F.col("is_split")
                       | (F.col("ord") == F.min("ord").over(wend))
-                      | (F.col("ord") == F.max("ord").over(wend))),
-    }).withColumn("vseq", F.sum(F.col("is_vertex").cast("int")).over(w))
-    head = aug.withColumn("seg", F.col("vseq") - 1)
-    tail = aug.filter("is_vertex").withColumn("seg", F.col("vseq") - 2)
-    both = head.unionByName(tail).filter(F.col("seg") >= 0)
-    seg_pts = (
-        both.groupBy("edge_key", "seg")
-        .agg(F.array_sort(F.collect_list(F.struct("ord", "lon", "lat"))).alias("pts"))
-        .filter(F.size("pts") >= 2)
-    )
-    first = F.element_at("pts", 1)
-    last = F.element_at("pts", -1)
-    mids = F.slice(F.col("pts"), 2, F.greatest(F.size("pts") - 2, F.lit(0)))
-    out = seg_pts.select(
+                      | (F.col("ord") == F.max("ord").over(wend))))
+    return _split_at_vertices(aug, "edge_key", "ord").select(
         F.concat_ws("#", "edge_key", "seg").alias("edge_key"),
-        first["lon"].alias("a_lon"), first["lat"].alias("a_lat"),
-        last["lon"].alias("b_lon"), last["lat"].alias("b_lat"),
-        F.concat_ws(";", F.transform(
-            mids, lambda p: F.format_string("%.9f %.9f", p["lon"], p["lat"]))).alias("mid"))
-    fwd = F.col("a_lon") < F.col("b_lon")
-    rev = F.concat_ws(";", F.reverse(F.split(F.col("mid"), ";")))
-    return out.select(
-        "edge_key",
-        F.when(fwd, F.col("a_lon")).otherwise(F.col("b_lon")).alias("v1_lon"),
-        F.when(fwd, F.col("a_lat")).otherwise(F.col("b_lat")).alias("v1_lat"),
-        F.when(fwd, F.col("b_lon")).otherwise(F.col("a_lon")).alias("v2_lon"),
-        F.when(fwd, F.col("b_lat")).otherwise(F.col("a_lat")).alias("v2_lat"),
-        F.when(F.col("mid") == "", F.lit(None)).otherwise(
-            F.when(fwd, F.col("mid")).otherwise(rev)).alias("shape_pts"))
+        *_standardized())
 
 
-def planarize(edges: DataFrame, max_rounds: int = 3) -> DataFrame:
-    """Iterate find-intersections / split until planar (bounded rounds).
+def planarize(edges: DataFrame) -> DataFrame:
+    """Iterate find-intersections / split until planar, at most
+    PLANARIZE_MAX_ROUNDS rounds; a last round that still split edges logs a
+    warning.
 
     ``edges`` columns: edge_key string + endpoint/shape columns as in
     graph_build output.  Scale: each round is one cell-keyed self-join —
     no driver-side geometry."""
     cur = edges
-    for _ in range(max_rounds):
+    for _ in range(PLANARIZE_MAX_ROUNDS):
         splits = find_intersections(cur).localCheckpoint()
         if splits.isEmpty():
             break
@@ -207,4 +191,8 @@ def planarize(edges: DataFrame, max_rounds: int = 3) -> DataFrame:
         # nests explode/window/group over the previous one); production
         # pipelines checkpoint to storage via plans.lineage.LineageStore
         cur = split_edges_at(cur, splits).localCheckpoint()
+    else:
+        log.warning(
+            "planarize: round %d (PLANARIZE_MAX_ROUNDS) still split edges; "
+            "the result may still have crossings", PLANARIZE_MAX_ROUNDS)
     return cur
